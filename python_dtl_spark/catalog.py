@@ -3290,9 +3290,7 @@ def _q_trace_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_counts = snaps.groupBy("id").agg(F.count("*").alias("n_rows"))
     pairs = None
     for m in reader.manifest["mappings"]:
-        p = spark.read.parquet(f"{trace_dir}/{m['path']}").select(
-            F.lit(m["tgt"]).alias("id")
-        )
+        p = reader._read(m).select(F.lit(m["tgt"]).alias("id"))
         pairs = p if pairs is None else pairs.unionByName(p)
     if pairs is not None:
         pair_counts = pairs.groupBy("id").agg(

@@ -29,7 +29,12 @@ Spark-first re-expression (SURVEY.md §2.7):
 Scale note: trace mode is opt-in and costs one parquet write per
 statement — at 100 TB you enable it for audited runs, or snapshot only
 selected levels.  The mappings themselves are narrow two-column tables
-that partition and join on rid with no skew.
+that partition and join on rid with no skew.  The manifest records
+each snapshot's and mapping's Spark schema, so reading a trace file
+back never runs a footer-inference job; and ``why`` / ``where_used``
+walk the mapping DAG with semi joins from the given rows, so they
+never build the transitive rid relation that :meth:`TraceReader.lineage`
+returns.
 """
 
 from __future__ import annotations
@@ -40,6 +45,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # trace levels, mirroring reference ir.py:371-403 (Level enum)
 LEVELS = (
@@ -60,6 +66,7 @@ class TableRecord:
     columns: list[dict]
     row_id: str
     path: str | None  # None for in-memory tracers
+    schema: dict | None = None  # Spark JSON schema of the file at ``path``
 
 
 @dataclass
@@ -69,6 +76,7 @@ class MappingRecord:
     tgt: str
     kind: str  # by_construction | by_key
     path: str | None
+    schema: dict | None = None
 
 
 class FileSystemTracer:
@@ -124,7 +132,9 @@ class FileSystemTracer:
         if pin not in ("local", "parquet"):
             raise ValueError(f"pin must be 'local' or 'parquet', got {pin!r}")
         self.pin = pin
-        self._snapshotted: set[str] = set()
+        # uid -> Spark JSON schema of every snapshot written, for the
+        # manifest
+        self._schemas: dict[str, dict] = {}
         os.makedirs(os.path.join(root, "tables"), exist_ok=True)
         os.makedirs(os.path.join(root, "mappings"), exist_ok=True)
         self.tables: list[TableRecord] = []
@@ -135,20 +145,22 @@ class FileSystemTracer:
     def materialize(self, uid: str, df: DataFrame, level: str = "STATEMENT") -> DataFrame:
         """Pin the working table (data + hidden rid columns) once and
         hand back the materialized frame: every downstream mapping and
-        the snapshot itself observe the same row ids."""
+        the snapshot itself observe the same row ids.  The read-back
+        carries ``df``'s schema, so the write is the only Spark job."""
         if self.snapshot_levels is not None and level not in self.snapshot_levels:
             if self.pin == "parquet":
                 path = os.path.join(self.root, "pins", f"{uid}.parquet")
                 os.makedirs(os.path.join(self.root, "pins"), exist_ok=True)
                 df.write.mode("overwrite").parquet(path)
-                return df.sparkSession.read.parquet(path)
+                return df.sparkSession.read.schema(df.schema).parquet(path)
             return df.localCheckpoint(eager=True)
         path = os.path.join(self.root, "tables", f"{uid}.parquet")
         df.write.mode("overwrite").parquet(path)
-        self._snapshotted.add(uid)
-        return df.sparkSession.read.parquet(path)
+        self._schemas[uid] = df.schema.jsonValue()
+        return df.sparkSession.read.schema(df.schema).parquet(path)
 
     def record_table(self, uid, *, name, level, columns, rid_col) -> None:
+        schema = self._schemas.get(uid)
         self.tables.append(
             TableRecord(
                 id=uid,
@@ -158,9 +170,10 @@ class FileSystemTracer:
                 row_id=rid_col,
                 path=(
                     f"tables/{uid}.parquet"
-                    if self.snapshot_levels is None or uid in self._snapshotted
+                    if self.snapshot_levels is None or schema is not None
                     else None
                 ),
+                schema=schema,
             )
         )
 
@@ -177,7 +190,12 @@ class FileSystemTracer:
         pairs.write.mode("overwrite").parquet(path)
         self.mappings.append(
             MappingRecord(
-                id=mid, src=src, tgt=tgt, kind=kind, path=f"mappings/{mid}.parquet"
+                id=mid,
+                src=src,
+                tgt=tgt,
+                kind=kind,
+                path=f"mappings/{mid}.parquet",
+                schema=pairs.schema.jsonValue(),
             )
         )
 
@@ -369,9 +387,17 @@ def compose(ab: DataFrame, bc: DataFrame) -> DataFrame:
 
 
 class TraceReader:
-    """Query a written trace: snapshots, direct mappings, and transitive
-    lineage between any two trace tables (the explainability UX the
-    reference's manifest enables, manifest.py:62-134)."""
+    """Query a written trace: snapshots, direct mappings, transitive
+    lineage between any two trace tables, and the row-level questions
+    :meth:`why` / :meth:`where_used` (the explainability UX the
+    reference's manifest enables, manifest.py:62-134).
+
+    The manifest records each snapshot's and mapping's Spark schema and
+    every file is read with it, so building any of these frames runs no
+    Spark job before its action; a manifest written without schemas
+    falls back to footer inference.  ``why`` / ``where_used`` are
+    semi-join walks from the given rows and never build the transitive
+    relation :meth:`lineage` returns."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -400,6 +426,14 @@ class TraceReader:
             return self._by_name[name_or_id]["id"]
         raise KeyError(f"no trace table {name_or_id!r}")
 
+    def _read(self, rec: dict) -> DataFrame:
+        """The parquet file a table or mapping record names, read with
+        the record's schema when the manifest has one."""
+        reader = self.spark.read
+        if rec.get("schema") is not None:
+            reader = reader.schema(StructType.fromJson(rec["schema"]))
+        return reader.parquet(os.path.join(self.root, rec["path"]))
+
     def snapshot(self, name_or_id: str) -> DataFrame:
         """The traced table's data columns plus its ``row_id`` column."""
         rec = self._by_id[self.table_id(name_or_id)]
@@ -409,9 +443,8 @@ class TraceReader:
                 f"{rec['level']} excluded from snapshot_levels); its rid "
                 "mappings exist but no data snapshot was written"
             )
-        df = self.spark.read.parquet(os.path.join(self.root, rec["path"]))
         cols = [c["name"] for c in rec["columns"]] + [rec["row_id"]]
-        return df.select(*cols).withColumnRenamed(rec["row_id"], "__rid")
+        return self._read(rec).select(*cols).withColumnRenamed(rec["row_id"], "__rid")
 
     def mapping(self, src: str, tgt: str) -> DataFrame | None:
         """Direct (one-hop) mapping between two trace tables, if any."""
@@ -419,65 +452,73 @@ class TraceReader:
         out = None
         for m in self.manifest["mappings"]:
             if m["src"] == src and m["tgt"] == tgt:
-                pairs = self.spark.read.parquet(os.path.join(self.root, m["path"]))
+                pairs = self._read(m)
                 out = pairs if out is None else out.unionByName(pairs)
         return out
 
+    def _paths(self, src: str, tgt: str) -> tuple[list[str], list[dict]]:
+        """The union of every mapping path ``src`` → ``tgt`` (table
+        ids): its nodes in topological order and its edges, both empty
+        when no path exists.
+
+        Walks expand nodes in this order (Kahn over the subgraph), so a
+        node's out-edges expand only after every in-path has been merged
+        into its reach set.  A plain BFS expands a node the first time
+        it is reached; in diamond-shaped graphs with unequal path
+        lengths the late-arriving path's rows would never reach the
+        node's descendants.  The trace graph is a DAG by construction
+        (mapping targets are always created after their sources), so the
+        topological order always exists.
+        """
+        mappings = self.manifest["mappings"]
+
+        def closure(start: str, near: str, far: str) -> set[str]:
+            seen, stack = {start}, [start]
+            while stack:
+                node = stack.pop()
+                for m in mappings:
+                    if m[near] == node and m[far] not in seen:
+                        seen.add(m[far])
+                        stack.append(m[far])
+            return seen
+
+        nodes = closure(src, "src", "tgt") & closure(tgt, "tgt", "src")
+        edges = [m for m in mappings if m["src"] in nodes and m["tgt"] in nodes]
+        # multi-edges count once per edge
+        indeg = dict.fromkeys(nodes, 0)
+        for m in edges:
+            indeg[m["tgt"]] += 1
+        ready = [src] if nodes else []
+        order: list[str] = []
+        while ready:
+            node = ready.pop()
+            order.append(node)
+            for m in edges:
+                if m["src"] == node:
+                    indeg[m["tgt"]] -= 1
+                    if indeg[m["tgt"]] == 0:
+                        ready.append(m["tgt"])
+        return order, edges
+
     def lineage(self, src: str, tgt: str) -> DataFrame | None:
         """Transitive (src_rid, tgt_rid) relation from ``src`` to ``tgt``
-        composed along every mapping path.
-
-        Nodes are processed in topological order (Kahn over the
-        reachable subgraph), so a node's out-edges expand only after
-        every in-path has been merged into its reach set.  A plain BFS
-        expands a node the first time it is reached; in diamond-shaped
-        graphs with unequal path lengths the late-arriving path's pairs
-        would never reach the node's descendants.  The trace graph is a
-        DAG by construction (mapping targets are always created after
-        their sources), so the topological order always exists.
-        """
+        composed along every mapping path, in the topological order of
+        :meth:`_paths`; ``None`` when no path exists."""
         src, tgt = self.table_id(src), self.table_id(tgt)
         if src == tgt:
             snap = self.snapshot(src)
             return snap.select(
                 F.col("__rid").alias("src_rid"), F.col("__rid").alias("tgt_rid")
             )
-        out_edges: dict[str, list[dict]] = {}
-        for m in self.manifest["mappings"]:
-            out_edges.setdefault(m["src"], []).append(m)
-        # nodes reachable from src
-        reachable = {src}
-        stack = [src]
-        while stack:
-            for m in out_edges.get(stack.pop(), []):
-                if m["tgt"] not in reachable:
-                    reachable.add(m["tgt"])
-                    stack.append(m["tgt"])
-        # Kahn's algorithm over the reachable subgraph (multi-edges
-        # count once per edge)
-        indeg = {n: 0 for n in reachable}
-        for n in reachable:
-            for m in out_edges.get(n, []):
-                if m["tgt"] in reachable:
-                    indeg[m["tgt"]] += 1
-        ready = [src]
-        order: list[str] = []
-        while ready:
-            node = ready.pop()
-            order.append(node)
-            for m in out_edges.get(node, []):
-                t = m["tgt"]
-                indeg[t] -= 1
-                if indeg[t] == 0:
-                    ready.append(t)
+        order, edges = self._paths(src, tgt)
         # reach[t] = composed (src_rid → t rid) mapping, complete by the
         # time t itself is expanded
         reach: dict[str, DataFrame] = {}
         for node in order:
-            for m in out_edges.get(node, []):
-                pairs = self.spark.read.parquet(
-                    os.path.join(self.root, m["path"])
-                )
+            for m in edges:
+                if m["src"] != node:
+                    continue
+                pairs = self._read(m)
                 step = pairs if node == src else compose(reach[node], pairs)
                 if m["tgt"] in reach:
                     reach[m["tgt"]] = (
@@ -489,20 +530,53 @@ class TraceReader:
                     reach[m["tgt"]] = step
         return reach.get(tgt)
 
+    def _walk(
+        self, src_table: str, tgt_table: str, rows: DataFrame, forward: bool
+    ) -> DataFrame:
+        """The rows of the far table linked along some mapping path to
+        ``rows`` (rows of the near table, carrying ``__rid``): forward
+        walks ``src_table`` → ``tgt_table``, backward the other way.
+
+        Each hop is a ``left_semi`` join of one mapping on its near rid
+        column, projected to the far one; where several paths reach a
+        node their rid sets are unioned.  A rid set only ever feeds the
+        right side of a semi join, which does not multiply rows, so no
+        step needs a distinct, and the given rows filter the first
+        mapping read rather than the last.
+        """
+        order, edges = self._paths(self.table_id(src_table), self.table_id(tgt_table))
+        if not order:
+            raise KeyError(f"no lineage path {src_table!r} → {tgt_table!r}")
+        near, far = ("src", "tgt") if forward else ("tgt", "src")
+        if not forward:
+            order.reverse()
+        reach = {order[0]: rows.select("__rid")}
+        for node in order:
+            for m in edges:
+                if m[near] != node:
+                    continue
+                step = (
+                    self._read(m)
+                    .join(
+                        reach[node].withColumnRenamed("__rid", f"{near}_rid"),
+                        f"{near}_rid",
+                        "left_semi",
+                    )
+                    .select(F.col(f"{far}_rid").alias("__rid"))
+                )
+                nxt = m[far]
+                reach[nxt] = step if nxt not in reach else reach[nxt].unionByName(step)
+        snap = self.snapshot(order[-1])
+        return snap.join(reach[order[-1]], "__rid", "left_semi").select(
+            "__rid", *(c for c in snap.columns if c != "__rid")
+        )
+
     def why(self, tgt_table: str, src_table: str, tgt_rows: DataFrame) -> DataFrame:
         """Explain: given rows of ``tgt_table`` (must carry ``__rid``),
-        return the contributing rows of ``src_table`` (with ``__rid``)."""
-        pairs = self.lineage(src_table, tgt_table)
-        if pairs is None:
-            raise KeyError(f"no lineage path {src_table!r} → {tgt_table!r}")
-        src_snap = self.snapshot(src_table)
-        wanted = tgt_rows.select(F.col("__rid").alias("tgt_rid")).dropDuplicates()
-        keep = (
-            pairs.join(wanted, on="tgt_rid")
-            .select(F.col("src_rid").alias("__rid"))
-            .dropDuplicates()
-        )
-        return src_snap.join(keep, on="__rid")
+        return the contributing rows of ``src_table`` (``__rid`` first,
+        then the snapshot columns).  A backward semi-join walk; raises
+        ``KeyError`` when no mapping path joins the two tables."""
+        return self._walk(src_table, tgt_table, tgt_rows, forward=False)
 
     def where_used(
         self, src_table: str, tgt_table: str, src_rows: DataFrame
@@ -510,16 +584,6 @@ class TraceReader:
         """Forward provenance, symmetric to :meth:`why`: given rows of
         ``src_table`` (must carry ``__rid``), return the rows of
         ``tgt_table`` they contributed to — "if I delete/fix these
-        inputs, which outputs change?".  Same transitive pair relation,
-        filtered on the source side."""
-        pairs = self.lineage(src_table, tgt_table)
-        if pairs is None:
-            raise KeyError(f"no lineage path {src_table!r} → {tgt_table!r}")
-        tgt_snap = self.snapshot(tgt_table)
-        wanted = src_rows.select(F.col("__rid").alias("src_rid")).dropDuplicates()
-        keep = (
-            pairs.join(wanted, on="src_rid")
-            .select(F.col("tgt_rid").alias("__rid"))
-            .dropDuplicates()
-        )
-        return tgt_snap.join(keep, on="__rid")
+        inputs, which outputs change?".  The same semi-join walk, run
+        forward."""
+        return self._walk(src_table, tgt_table, src_rows, forward=True)

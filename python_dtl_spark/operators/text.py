@@ -256,9 +256,14 @@ def tfidf_top_terms(
     forcing ``count(tf)`` produced no ReusedExchange, and persisting
     tf measured as a loss) — which ran the corpus tokenize+explode+
     aggregate TWICE per query.  The window computes the identical df
-    on the single tf pass (count over an unordered partition — no
-    sort, no join), one fewer corpus pass and one fewer exchange at
-    any scale.
+    on the single tf pass with no join: one fewer corpus pass and one
+    fewer exchange.  It still sorts: WindowExec sorts each task's rows
+    by term.  Hot-term skew: unlike the groupBy, the window has no
+    map-side partial aggregation, so every tf row of a term lands in
+    one window task.  A stopword-class term that appears in nearly
+    every document makes that task corpus-sized (one straggler, and
+    spill once it outgrows memory); for corpora with such terms a
+    salted two-level count or the groupBy form is the safer shape.
 
     Deliberately NOT ``spread()`` (round-6 tried it, round-7 probed
     it): unlike the census, whose md5-per-window map stage dominates

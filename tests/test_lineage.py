@@ -11,6 +11,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import uuid
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -925,3 +928,213 @@ def test_edit_distance_keep_one_lineage_walk(spark, tmp_path):
     assert [
         r["__rid"] for r in reader.why("kept", "titles", kept5).collect()
     ] == [5]
+
+
+# -- semi-join walks and schema-carrying reads --------------------------------
+
+
+def _composed_why(reader, tgt, src, rows):
+    """The composed-relation answer ``snapshot ⋈ π(lineage ⋈ rows)``."""
+    wanted = rows.select(F.col("__rid").alias("tgt_rid")).dropDuplicates()
+    keep = (
+        reader.lineage(src, tgt)
+        .join(wanted, on="tgt_rid")
+        .select(F.col("src_rid").alias("__rid"))
+        .dropDuplicates()
+    )
+    return reader.snapshot(src).join(keep, on="__rid")
+
+
+def _composed_where_used(reader, src, tgt, rows):
+    wanted = rows.select(F.col("__rid").alias("src_rid")).dropDuplicates()
+    keep = (
+        reader.lineage(src, tgt)
+        .join(wanted, on="src_rid")
+        .select(F.col("tgt_rid").alias("__rid"))
+        .dropDuplicates()
+    )
+    return reader.snapshot(tgt).join(keep, on="__rid")
+
+
+def _same_answer(got, want):
+    assert got.columns == want.columns
+    assert Counter(map(tuple, got.collect())) == Counter(map(tuple, want.collect()))
+
+
+def _each_row(snap):
+    return [snap.filter(F.col("__rid") == r["__rid"]) for r in snap.select("__rid").collect()]
+
+
+# a → j → j' (join, 2 hops) and a → g → (insert) → j' (aggregate, 3
+# hops) meet in the INSERTed binding j', so the paths from a to the
+# export have unequal lengths and a-rows 2 and 3 reach it along both
+DIAMOND = """
+WITH a AS IMPORT 'a';
+WITH b AS IMPORT 'b';
+WITH j AS SELECT key, a.value AS value FROM a JOIN b ON a.key = b.key;
+WITH g AS SELECT parity AS key, sum(value) AS value FROM a GROUP BY parity;
+INSERT INTO j SELECT key, value FROM g;
+EXPORT j TO 'out';
+"""
+DIAMOND_INPUTS = {
+    "a": (
+        [(1, 10, 1), (2, 20, 0), (3, 30, 1), (4, 40, 0), (5, 50, 1), (6, 60, 0)],
+        "key long, value long, parity long",
+    ),
+    "b": ([(2, 200), (3, 300), (9, 900)], "key long, value long"),
+}
+
+
+def _diamond_trace(spark, trace_dir):
+    out = _run(spark, DIAMOND, DIAMOND_INPUTS, FileSystemTracer(trace_dir))
+    assert {(r.key, r.value) for r in out["out"].collect()} == {
+        (2, 20), (3, 30), (0, 120), (1, 90)
+    }
+    return TraceReader(spark, trace_dir)
+
+
+def test_why_where_used_match_composed_relation_on_diamond(spark, tmp_path):
+    reader = _diamond_trace(spark, os.path.join(str(tmp_path), "trace"))
+    out_snap = reader.snapshot("out")
+    for row in _each_row(out_snap):
+        for src in ("a", "b"):
+            _same_answer(
+                reader.why("out", src, row), _composed_why(reader, "out", src, row)
+            )
+    for row in _each_row(reader.snapshot("a")):
+        _same_answer(
+            reader.where_used("a", "out", row),
+            _composed_where_used(reader, "a", "out", row),
+        )
+    # a-row 2 reaches the export by the join (2, 20) and the group (0, 120)
+    two = reader.snapshot("a").filter(F.col("key") == 2)
+    hits = {(r.key, r.value) for r in reader.where_used("a", "out", two).collect()}
+    assert hits == {(2, 20), (0, 120)}
+    # all rows at once, and the snapshot's own rows
+    _same_answer(
+        reader.why("out", "a", out_snap), _composed_why(reader, "out", "a", out_snap)
+    )
+    assert reader.why("out", "out", out_snap).count() == 4
+    with pytest.raises(KeyError, match="no lineage path"):
+        reader.why("a", "b", reader.snapshot("a"))
+    with pytest.raises(KeyError, match="no lineage path"):
+        reader.where_used("out", "a", out_snap)
+
+
+def test_why_where_used_match_composed_relation_string_rids(spark, tmp_path):
+    """Pipeline steps keyed by string natural keys: corpus → deduped →
+    by_lang (three hops through an identity hop) plus a direct corpus →
+    by_lang mapping."""
+    from python_dtl_spark.lineage import record_pipeline_step
+    from python_dtl_spark.operators.dedup import exact_dedup_canonical
+
+    docs = spark.createDataFrame(
+        [("d0", "x", "en"), ("d1", "x", "en"), ("d2", "y", "de"),
+         ("d3", "z", "fr"), ("d4", "y", "de")],
+        "doc_id string, text string, lang string",
+    )
+    deduped, mapping = exact_dedup_canonical(
+        docs, "doc_id", ["text"], with_lineage=True
+    )
+    by_lang = deduped.join(docs.select("doc_id", "lang"), "doc_id")
+    trace_dir = os.path.join(str(tmp_path), "ptrace")
+    tracer = FileSystemTracer(trace_dir)
+    corpus_uid, dedup_uid = record_pipeline_step(
+        tracer, src_name="corpus", tgt_name="deduped", src_df=docs,
+        tgt_df=deduped, mapping=mapping, src_key="doc_id", tgt_key="doc_id",
+    )
+    kept_uid, lang_uid = record_pipeline_step(
+        tracer, src_name="kept", tgt_name="by_lang", src_df=deduped,
+        tgt_df=by_lang.groupBy("lang").agg(F.count("*").alias("n")),
+        mapping=by_lang.select(
+            F.col("doc_id").alias("src_doc_id"), F.col("lang").alias("kept_lang")
+        ),
+        src_key="doc_id", tgt_key="lang",
+    )
+    tracer.record_mapping(
+        dedup_uid, kept_uid, kind="by_key",
+        pairs=deduped.select(F.col("doc_id").alias("src_rid"), F.col("doc_id").alias("tgt_rid")),
+    )
+    tracer.record_mapping(
+        corpus_uid, lang_uid, kind="by_key",
+        pairs=docs.select(F.col("doc_id").alias("src_rid"), F.col("lang").alias("tgt_rid")),
+    )
+    tracer.write_manifest()
+
+    reader = TraceReader(spark, trace_dir)
+    for row in _each_row(reader.snapshot("by_lang")):
+        _same_answer(
+            reader.why("by_lang", "corpus", row),
+            _composed_why(reader, "by_lang", "corpus", row),
+        )
+    for row in _each_row(reader.snapshot("corpus")):
+        _same_answer(
+            reader.where_used("corpus", "by_lang", row),
+            _composed_where_used(reader, "corpus", "by_lang", row),
+        )
+    de = reader.snapshot("by_lang").filter(F.col("__rid") == "de")
+    assert sorted(r["__rid"] for r in reader.why("by_lang", "corpus", de).collect()) == ["d2", "d4"]
+
+
+def test_manifest_without_schemas_reads_and_answers_identically(spark, tmp_path):
+    """Manifests written before the schema field existed fall back to
+    footer inference and give the same answers."""
+    trace_dir = os.path.join(str(tmp_path), "trace")
+    reader = _diamond_trace(spark, trace_dir)
+    manifest = reader.manifest
+    assert all(r["schema"] for r in manifest["tables"] + manifest["mappings"])
+    old_dir = os.path.join(str(tmp_path), "old")
+    shutil.copytree(trace_dir, old_dir)
+    for rec in manifest["tables"] + manifest["mappings"]:
+        del rec["schema"]
+    with open(os.path.join(old_dir, "trace.json"), "w") as f:
+        json.dump(manifest, f)
+    old = TraceReader(spark, old_dir)
+    assert "schema" not in old.manifest["mappings"][0]
+    for r in reader.snapshot("out").select("__rid").collect():
+        got = old.why("out", "a", old.snapshot("out").filter(F.col("__rid") == r["__rid"]))
+        want = reader.why("out", "a", reader.snapshot("out").filter(F.col("__rid") == r["__rid"]))
+        assert got.dtypes == want.dtypes
+        _same_answer(got, want)
+
+
+def _jobs_launched(spark, fn):
+    """Run ``fn`` under a fresh job group; return the number of Spark
+    jobs it launched and its result."""
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_trace_reader_launches_no_job_before_an_action(spark, tmp_path):
+    trace_dir = os.path.join(str(tmp_path), "trace")
+    _diamond_trace(spark, trace_dir)
+
+    def build():
+        reader = TraceReader(spark, trace_dir)
+        out = reader.snapshot("out")
+        reader.mapping("a", "j")
+        return reader.why("out", "a", out.filter(F.col("key") == 1))
+
+    jobs, why = _jobs_launched(spark, build)
+    assert jobs == 0
+    assert sorted(r.key for r in why.collect()) == [1, 3, 5]
+
+
+def test_materialize_runs_only_the_snapshot_write(spark, tmp_path):
+    df = spark.createDataFrame(*NUMS).select(
+        "key",
+        (F.col("value") * 2).alias("v2"),
+        F.monotonically_increasing_id().alias("__rid"),
+    )
+    tracer = FileSystemTracer(os.path.join(str(tmp_path), "trace"))
+    jobs, snap = _jobs_launched(spark, lambda: tracer.materialize("t000_x", df))
+    assert jobs == 1
+    assert snap.dtypes == df.dtypes
+    assert sorted(r.v2 for r in snap.collect()) == [20, 40, 60, 80, 100, 120]
